@@ -18,111 +18,70 @@ object Bench {
     case c => c.toString
   } + "\""
 
+  /** Silver-layout build (untimed, like any ingest-time maintenance): the
+    * engine queries its own bucketed silver tables, not raw ingest files.
+    * lineitem bucketed on l_orderkey → q03's per-order aggregate is
+    * exchange-free; orders bucketed+sorted on o_custkey → q06's
+    * aggregate and q20's window read pre-partitioned, pre-sorted input
+    * (no exchange, no sort). See silver.BucketedTables.
+    * Each build is guarded on the table's presence so a PARTIAL
+    * MakeScaled fixture (e.g. documents-only for a span-family sf10
+    * anchor) runs without dragging the full TPC-H set along; the
+    * driver's full sf dir always has every table, so the guard never
+    * fires there. */
+  def maintainLayouts(spark: SparkSession, dir: String): Unit = {
+    def hasTable(name: String): Boolean =
+      java.nio.file.Files.exists(
+        java.nio.file.Paths.get(s"$dir/$name.parquet"))
+    if (hasTable("lineitem")) graft.silver.BucketedTables.ensureLayout(
+      spark, dir, "lineitem", Seq("l_orderkey"))
+    if (hasTable("orders")) {
+      graft.silver.BucketedTables.ensureLayout(
+        spark, dir, "orders", Seq("o_custkey"),
+        sortCols = Seq("o_custkey", "o_orderdate", "o_orderkey"))
+      // second orders projection, co-bucketed with lineitem's layout:
+      // q03's fact-fact join reads both sides pre-partitioned on the
+      // SAME 32-bucket orderkey hash → zipped sort-merge, zero exchange
+      // and no broadcast build on the measured path (measured faster
+      // than the broadcast plan; multiple sorted projections of a hot
+      // table are standard lakehouse layout maintenance)
+      graft.silver.BucketedTables.ensureLayout(
+        spark, dir, "orders", Seq("o_orderkey"),
+        sortCols = Seq("o_orderkey"))
+    }
+    if (hasTable("events")) {
+      // events bucketed on user_id, bucket-sorted by (user_id, ts,
+      // event_id): q141's sessionize window reads pre-partitioned,
+      // pre-sorted input — no exchange, no sort (the q06/q20 pattern on
+      // the events fact table)
+      graft.silver.BucketedTables.ensureLayout(
+        spark, dir, "events", Seq("user_id"),
+        sortCols = Seq("user_id", "ts", "event_id"))
+      // click sessions as a DERIVED silver table (incremental-gold
+      // pattern: sessionize once at ingest, not once per query): q141's
+      // measured path becomes the keyed overlap join alone, riding the
+      // user_id bucketing shared with the events layout — profiling
+      // showed the sessionize exchange was the dominant floor term.
+      // Built by the SAME code as q141's inline fallback
+      // (Advanced.clickSessions), so the paths are equal by construction.
+      graft.silver.BucketedTables.ensureDerivedLayout(
+        spark, dir, "click_sessions", Seq("user_id"),
+        sortCols = Seq("user_id", "session_idx")) {
+        graft.queries.Advanced.clickSessions(spark, dir)
+      }
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // SPARK_GRAFT_SHUFFLE_PARTITIONS: dev knob for scale studies — at a
-    // fixed 32, an sf100 fixture's shuffle partitions are 100× fatter
-    // than the sf1 ones, and spill (not the operator) dominates; a real
-    // cluster sizes partition count by bytes, which AQE coalesce
-    // emulates downward but nothing emulates upward from a fixed 32
-    val shufflePartitions =
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      // Coalesce post-shuffle partitions to the advisory size instead of
-      // keeping one per core (the Spark tuning guide's recommended
-      // setting): at sf0.1 a 2 MB shuffle otherwise fans out to 32
-      // near-empty reducers per stage, and at 100 TB the advisory size is
-      // the setting that keeps reducer inputs memory-sized anyway.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "false"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.autoBroadcastJoinThreshold", s"${64L * 1024 * 1024}")
-      // Size file splits for the bench SF (the brief's "size
-      // maxPartitionBytes to the target SF"): the sf0.1 tables are a few
-      // MB, so the 128MB default packs every file into ONE scan task and
-      // serializes the decode; 4MB splits + 1MB open cost spread the
-      // compacted files (see sources.Compaction) across the cores exactly
-      // as a 100 TB table's 128MB files spread across a cluster. Measured
-      // best among {128MB/4MB, 4MB/1MB, 1MB/512KB} at sf0.1.
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES", s"${4L * 1024 * 1024}"))
-      .config("spark.sql.files.openCostInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_OPEN_COST", s"${1024 * 1024}"))
-      // The 8 headline queries together hold well over the default 100
-      // generated-class cache entries; with the default, round-robin
-      // repeats evict and Janino-recompile every stage on every run
-      // (~0.3 s/query of pure recompilation, measured: q01 isolated
-      // 0.225 s vs 0.546 s interleaved). A long-lived engine would carry
-      // its compiled operators; let it.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      // per-run warehouse for the bucketed silver layouts (the in-memory
-      // catalog forgets tables across JVMs; a fresh dir avoids colliding
-      // with a dead run's files)
-      .config("spark.sql.warehouse.dir",
-        s"target/bench-warehouse-${ProcessHandle.current().pid()}")
-      .getOrCreate()
+    // per-run warehouse for the bucketed silver layouts (the in-memory
+    // catalog forgets tables across JVMs; a fresh dir avoids colliding
+    // with a dead run's files)
+    val spark = graft.core.Sessions.get(cpus.toInt,
+      s"target/bench-warehouse-${ProcessHandle.current().pid()}")
     spark.sparkContext.setLogLevel("WARN")
-
-    // Silver-layout build (untimed, like any ingest-time maintenance): the
-    // engine queries its own bucketed silver tables, not raw ingest files.
-    // lineitem bucketed on l_orderkey → q03's per-order aggregate is
-    // exchange-free; orders bucketed+sorted on o_custkey → q06's
-    // aggregate and q20's window read pre-partitioned, pre-sorted input
-    // (no exchange, no sort). See silver.BucketedTables.
-    // Each build is guarded on the table's presence so a PARTIAL
-    // MakeScaled fixture (e.g. documents-only for a span-family sf10
-    // anchor) runs without dragging the full TPC-H set along; the
-    // driver's full sf dir always has every table, so the guard never
-    // fires there.
-    def maintainLayouts(dir: String): Unit = {
-      def hasTable(name: String): Boolean =
-        java.nio.file.Files.exists(
-          java.nio.file.Paths.get(s"$dir/$name.parquet"))
-      if (hasTable("lineitem")) graft.silver.BucketedTables.ensureLayout(
-        spark, dir, "lineitem", Seq("l_orderkey"))
-      if (hasTable("orders")) {
-        graft.silver.BucketedTables.ensureLayout(
-          spark, dir, "orders", Seq("o_custkey"),
-          sortCols = Seq("o_custkey", "o_orderdate", "o_orderkey"))
-        // second orders projection, co-bucketed with lineitem's layout:
-        // q03's fact-fact join reads both sides pre-partitioned on the
-        // SAME 32-bucket orderkey hash → zipped sort-merge, zero exchange
-        // and no broadcast build on the measured path (measured faster
-        // than the broadcast plan; multiple sorted projections of a hot
-        // table are standard lakehouse layout maintenance)
-        graft.silver.BucketedTables.ensureLayout(
-          spark, dir, "orders", Seq("o_orderkey"),
-          sortCols = Seq("o_orderkey"))
-      }
-      if (hasTable("events")) {
-        // events bucketed on user_id, bucket-sorted by (user_id, ts,
-        // event_id): q141's sessionize window reads pre-partitioned,
-        // pre-sorted input — no exchange, no sort (the q06/q20 pattern on
-        // the events fact table)
-        graft.silver.BucketedTables.ensureLayout(
-          spark, dir, "events", Seq("user_id"),
-          sortCols = Seq("user_id", "ts", "event_id"))
-        // click sessions as a DERIVED silver table (incremental-gold
-        // pattern: sessionize once at ingest, not once per query): q141's
-        // measured path becomes the keyed overlap join alone, riding the
-        // user_id bucketing shared with the events layout — ProfileQ141
-        // showed the sessionize exchange was the dominant floor term.
-        // Built by the SAME code as q141's inline fallback
-        // (Advanced.clickSessions), so the paths are equal by construction.
-        graft.silver.BucketedTables.ensureDerivedLayout(
-          spark, dir, "click_sessions", Seq("user_id"),
-          sortCols = Seq("user_id", "session_idx")) {
-          graft.queries.Advanced.clickSessions(spark, dir)
-        }
-      }
-    }
-    maintainLayouts(sfDir)
+    maintainLayouts(spark, sfDir)
 
     // Warmup: run every headline query once at the bench SF (untimed).
     // This fills the schema-keyed codegen cache, JIT-compiles the
@@ -397,7 +356,7 @@ object Bench {
             (j, j)
           }
         else {
-          maintainLayouts(sf1Dir)
+          maintainLayouts(spark, sf1Dir)
           val fw = sys.env.getOrElse("SPARK_GRAFT_FLOOR_SF1_WARMUPS", "1").toInt
           val fr = sys.env.getOrElse("SPARK_GRAFT_FLOOR_SF1_ROUNDS", "3").toInt
           (1 to fw).foreach(_ => floorRows.foreach(timeOneAt(_, sf1Dir)))
@@ -472,7 +431,7 @@ object Bench {
           s"sf1 fixture absent at $sf1Dir — build with: sbt \"runMain " +
             s"graft.tools.MakeScaled /root/testdata/sf0.1 $sf1Dir 10\"")
       else {
-        maintainLayouts(sf1Dir)
+        maintainLayouts(spark, sf1Dir)
         val sw = sys.env.getOrElse("SPARK_GRAFT_SCALING_WARMUPS", "1").toInt
         val sr = sys.env.getOrElse("SPARK_GRAFT_SCALING_ROUNDS", "2").toInt
         (1 to sw).foreach(_ => anchors.foreach(timeOneAt(_, sf1Dir)))

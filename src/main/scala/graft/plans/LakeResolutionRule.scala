@@ -96,7 +96,7 @@ final class LakeParser(spark: SparkSession, delegate: ParserInterface)
 }
 
 /** Session-extension entry point:
-  * `SparkSession.builder().withExtensions(new LakeExtensions)` or conf
+  * `graft.core.Sessions.get` (which installs it), or conf
   * `spark.sql.extensions=graft.plans.LakeExtensions`. */
 final class LakeExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {

@@ -36,13 +36,13 @@ final class QueryService(lake: Lake) {
       maxRows: Int)
 
   def run(sql: String): Either[String, QueryResult] = {
-    // dialect shims first (QUALIFY → subquery, EXCLUDE/REPLACE → EXCEPT)
-    // so the parsed-plan guard sees SQL Spark can actually parse
-    val sql2 = StarRewriter.rewrite(QualifyRewriter.rewrite(sql))
+    // dialect shims first so the parsed-plan guard sees SQL Spark can
+    // actually parse
+    val sql2 = rewriteDialect(sql)
     val verdict = QueryGuard.validate(lake.spark, sql2)
     if (!verdict.ok) return Left(verdict.reason)
     try {
-      val df = dataFrame(sql2)
+      val df = resolve(sql2)
       val taken: Array[Row] = df.take(MaxResultRows + 1)
       val truncated = taken.length > MaxResultRows
       val rows = taken.take(MaxResultRows).toSeq.map(_.toSeq)
@@ -57,10 +57,16 @@ final class QueryService(lake: Lake) {
     * statically-empty inputs keep the DuckDB/ISO grand-total row —
     * the optimizer-batch copy of the rule only sees runtime-empty
     * plans (EmptyGroupingSetsRule scaladoc). */
-  def dataFrame(sql: String): DataFrame =
+  def dataFrame(sql: String): DataFrame = resolve(rewriteDialect(sql))
+
+  /** QUALIFY → subquery, EXCLUDE/REPLACE → EXCEPT. */
+  private def rewriteDialect(sql: String): String =
+    StarRewriter.rewrite(QualifyRewriter.rewrite(sql))
+
+  /** Lake names → catalog names, then analysis on dialect-rewritten SQL. */
+  private def resolve(sql: String): DataFrame =
     graft.plans.EmptyGroupingSetsRule.applyAnalyzed(
-      lake.spark.sql(NameRewriter.rewrite(lake,
-        StarRewriter.rewrite(QualifyRewriter.rewrite(sql)))))
+      lake.spark.sql(NameRewriter.rewrite(lake, sql)))
 
   /** Error sanitization (query_api/main.py:186-207): missing relations →
     * "does not exist or has no data"; object-store URIs and internal

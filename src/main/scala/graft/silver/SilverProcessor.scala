@@ -76,9 +76,10 @@ final class SilverProcessor(lake: Lake) {
       } else batch
     val clean = deduped.drop("_insert_date", "_domain", "_endpoint")
     val path = lake.silverPath(domain, name)
+    val partition = partitionColumn(schema)
     if (pks.isEmpty) { // no PKs: plain append (main.py:145-146)
       clean.write.mode("append").parquet(path)
-    } else partitionColumn(schema) match {
+    } else partition match {
       // partition-scoped merge when a PK column doubles as the partition
       // key (the 100 TB path — O(touched partitions) per batch)
       case Some(p) => PartitionedUpsert.writeMerged(clean, path, pks, p)
@@ -86,6 +87,9 @@ final class SilverProcessor(lake: Lake) {
     }
     lake.registry.registerSilver(domain, name, path)
     lake.registerTable(domain, "silver", name, path)
+    // creating a table over existing files does not register their
+    // partitions: without this, catalog reads miss every partition
+    if (partition.isDefined) spark.catalog.recoverPartitions(s"${domain}_silver.$name")
     spark.read.parquet(path)
   }
 

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev-only: derive a larger scale factor from the driver-provided test
@@ -100,13 +100,8 @@ object MakeScaled {
     val only: Option[Set[String]] =
       if (args.length > 3) Some(args(3).split(',').map(_.trim).toSet)
       else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = graft.core.Sessions.get(cpus)
     spark.sparkContext.setLogLevel("WARN")
 
     def t(name: String): DataFrame =

@@ -139,12 +139,7 @@ object MergeRace {
   /** args: <tableDir> <logFile> <seed> <nBatches> <keyBase> <keySpan> */
   def main(args: Array[String]): Unit = {
     val Array(table, logFile, seed, n, keyBase, keySpan) = args.take(6)
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.Sessions.get(2)
     spark.sparkContext.setLogLevel("ERROR")
     try {
       run(spark, table, Paths.get(logFile), seed.toLong, n.toInt,

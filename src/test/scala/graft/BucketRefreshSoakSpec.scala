@@ -3,7 +3,7 @@ package graft
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -31,12 +31,7 @@ import graft.silver.{BucketedTables, IncrementalSessions}
 @SlowTest
 class BucketRefreshSoakSpec extends AnyFunSuite {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = TestSpark.session
 
   private def rows(df: DataFrame): Set[(Long, Long, Long, Long)] =
     df.select(col("user_id"), col("session_idx"), col("s_start"),

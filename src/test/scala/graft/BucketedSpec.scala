@@ -1,8 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.silver.BucketedTables
@@ -10,29 +7,18 @@ import graft.silver.BucketedTables
 /** Bucketed-table upsert: correctness + the exchange-free plan property
   * that makes merges O(batch) instead of O(table) network at scale. */
 class BucketedSpec extends AnyFunSuite {
-  private lazy val spark = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.warehouse.dir",
-        Files.createTempDirectory("graft-wh-").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s
-  }
+  private lazy val spark = TestSpark.session
 
-  // unique db per run: the shared session may keep the default warehouse
-  // dir, where a previous run's managed-table location would collide
+  // unique db per run: suites share one session and its warehouse
   private val db = s"bdb${System.nanoTime()}"
 
   test("bucketed merge: correctness and no target-side exchange") {
     import spark.implicits._
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     // align shuffle partitions with the bucket count so the source batch
     // shuffles ONCE straight into the bucket layout (the production
     // sizing rule: buckets = a multiple of cluster parallelism)
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
+    TestSpark.withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.shuffle.partitions" -> "8") {
       val base = (1 to 1000).map(i => (i.toLong, s"v$i")).toDF("id", "payload")
       BucketedTables.writeMerged(spark, db, "items", base, Seq("id"))
 
@@ -55,9 +41,6 @@ class BucketedSpec extends AnyFunSuite {
       assert(after.filter($"id" === 50).head().getString(1) == "new50")
       assert(after.filter($"id" === 500).head().getString(1) == "v500")
       assert(after.filter($"id" === 1050).head().getString(1) == "new1050")
-    } finally {
-      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-      spark.conf.set("spark.sql.shuffle.partitions", "4")
     }
   }
 

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.QualifiedTableName
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -18,12 +17,7 @@ import graft.silver.Upsert
   * UNRELATED table's cached relation must survive the merge. */
 class CacheScopeSpec extends AnyFunSuite {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = TestSpark.session
 
   /** The relation-cache entry for db.table, probing both key shapes the
     * SessionCatalog uses across versions. */

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.{Compaction, Tables}
@@ -10,11 +9,7 @@ import graft.sources.{Compaction, Tables}
 /** Read-layout optimization (Compaction.loadOptimized) + Tables cache
   * fingerprinting/invalidation. */
 class CompactionSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = TestSpark.session
 
   private def writeSingleRowGroup(rows: Int): String = {
     val base = Files.createTempDirectory("graft-compaction-").toString

@@ -2,7 +2,7 @@ package graft
 
 import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -30,12 +30,7 @@ import graft.silver.IncrementalSessions
 @SlowTest
 class ConcurrencySoakSpec extends AnyFunSuite {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = TestSpark.session
 
   private def rows(df: DataFrame): Set[(Long, Long, Long, Long)] =
     df.select(col("user_id"), col("session_idx"), col("s_start"),

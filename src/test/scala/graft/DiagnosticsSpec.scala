@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,12 +13,7 @@ import graft.sources.Tables
 class DiagnosticsSpec extends AnyFunSuite {
   private val dir = "/root/testdata/sf0.001"
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = TestSpark.session
 
   test("skewDiagnosis reports counts, shares and ceil-skew salt") {
     import spark.implicits._
@@ -209,13 +203,7 @@ class DiagnosticsSpec extends AnyFunSuite {
 
   test("indexedTermSearch: bucket-pruned postings, same results as the " +
       "scan-side search") {
-    val wh = java.nio.file.Files.createTempDirectory("graft-idx-").toString
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.warehouse.dir", wh)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = TestSpark.session
     val db = s"idx${System.nanoTime()}"
     val docs = Tables.load(s, dir, "documents")
     TextOps.buildTermIndex(docs, db, "terms")
@@ -233,13 +221,7 @@ class DiagnosticsSpec extends AnyFunSuite {
 
   test("crossNearDuplicatesIndexed: persisted band index gives the exact " +
       "output of the inline screen, from a bucketed scan") {
-    val wh = java.nio.file.Files.createTempDirectory("graft-bidx-").toString
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.warehouse.dir", wh)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = TestSpark.session
     val db = s"bidx${System.nanoTime()}"
     val docs = Tables.load(s, dir, "documents")
       .select(org.apache.spark.sql.functions.col("doc_id"),
@@ -266,13 +248,7 @@ class DiagnosticsSpec extends AnyFunSuite {
 
   test("updateBandIndex/compactBandIndex: incremental add + tombstone " +
       "delete equals a fresh rebuild; compaction folds tombstones") {
-    val wh = java.nio.file.Files.createTempDirectory("graft-bmx-").toString
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.warehouse.dir", wh)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = TestSpark.session
     import org.apache.spark.sql.functions.col
     import s.implicits._
     val db = s"bmx${System.nanoTime()}"

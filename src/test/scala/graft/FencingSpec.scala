@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -21,12 +21,7 @@ class FencingSpec extends AnyFunSuite {
 
   // local[4]/4 like every suite: the shared getOrCreate session's
   // parallelism shapes file counts other suites' bytes budgets assume
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = TestSpark.session
 
   private def df(pairs: Seq[(Long, String)]): DataFrame = {
     import spark.implicits._

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.tools.FuzzSql
@@ -20,13 +19,7 @@ class FuzzSqlSpec extends AnyFunSuite {
   private val dir = "/root/testdata/sf0.001"
 
   private lazy val spark = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.functions.Dialect.register(s)
+    val s = TestSpark.session
     FuzzSql.tabs.foreach(t => graft.sources.Tables.load(s, dir, t.name)
       .createOrReplaceTempView(t.name))
     s

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** EmptyGroupingSetsRule: ISO/DuckDB grand-total semantics for grouping
@@ -8,13 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class GroupingSetsSpec extends AnyFunSuite {
 
   private lazy val spark = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.functions.Dialect.register(s) // installs the rule
+    val s = TestSpark.session
     import s.implicits._
     // parquet-backed, not a literal relation: a statically-empty plan is
     // collapsed by PropagateEmptyRelation before ANY optimizer extension

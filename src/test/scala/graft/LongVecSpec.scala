@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,11 +10,7 @@ import graft.ops.VectorOps
   * higher-order-function forms they replace, on real quantized embedding
   * data and on nulls. */
 class LongVecSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = TestSpark.session
 
   test("dot and dist2 match the composed aggregate(zip_with) forms") {
     val emb = graft.sources.Tables

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -16,11 +15,7 @@ import graft.silver.{BucketedState, Upsert}
   * replaces, the pre-manifest upgrade path, and the growth-law sizing
   * it now feeds. */
 class ManifestSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = TestSpark.session
 
   private def df(kv: Seq[(Long, String)]) = {
     import spark.implicits._

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 import org.scalatest.funsuite.AnyFunSuite
@@ -11,11 +10,7 @@ import graft.functions.Md5Prefix32
   * built-in form (and therefore to the DuckDB oracle formula), in both
   * codegen and interpreted paths, and usable from SQL. */
 class Md5Prefix32Spec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = TestSpark.session
 
   test("matches conv(substring(md5)) for all document shingle content") {
     val docs = graft.sources.Tables.load(spark, "/root/testdata/sf0.001", "documents")

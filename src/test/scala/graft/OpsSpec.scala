@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,12 +12,7 @@ import graft.sources.Tables
 class OpsSpec extends AnyFunSuite {
   private val dir = "/root/testdata/sf0.001"
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = TestSpark.session
 
   test("lsh_bucket kernel equals the composed explode/join/aggregate form") {
     val emb = Tables.load(spark, dir, "embeddings")
@@ -451,13 +445,7 @@ class OpsSpec extends AnyFunSuite {
   test("ivfTopKIndexed: persisted bucketed index gives exactly ivfTopK's " +
       "output; corpus side reads the index") {
     import graft.ops.VectorOps
-    val wh = java.nio.file.Files.createTempDirectory("graft-ivfidx-").toString
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.warehouse.dir", wh)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = TestSpark.session
     val db = s"ivf${System.nanoTime()}"
     val emb = Tables.load(s, dir, "embeddings")
     VectorOps.buildIvfIndex(emb, db, "ivf")

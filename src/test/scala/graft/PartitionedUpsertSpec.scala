@@ -3,7 +3,6 @@ package graft
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.silver.PartitionedUpsert
@@ -11,11 +10,7 @@ import graft.silver.PartitionedUpsert
 /** Partition-scoped upsert: correct merge semantics AND the physical
   * property that untouched partitions' files are left as-is. */
 class PartitionedUpsertSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = TestSpark.session
 
   private def listFiles(dir: String): Map[String, Long] =
     Files.walk(Paths.get(dir)).iterator().asScala
@@ -49,6 +44,12 @@ class PartitionedUpsertSpec extends AnyFunSuite {
     val df = lake.silver.processEndpoint("ops", "metrics").get
     assert(df.count() == 3)
     assert(df.filter("metric_id = 1").select("value").head().getDouble(0) == 9.0)
+    // the catalog table sees the merged partitions too
+    val read = lake.query.run(
+      "SELECT metric_id, value FROM ops.silver.metrics ORDER BY metric_id")
+      .fold(err => fail(err), identity)
+    assert(read.rowCount == 3)
+    assert(read.rows.head == Seq(1, 9.0))
   }
 
   test("merge rewrites only the touched partitions") {

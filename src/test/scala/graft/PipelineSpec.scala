@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core._
@@ -11,12 +10,7 @@ import graft.gold.GoldJob
 /** End-to-end engine tests: ingest → bronze → silver (dedup/upsert/schema
   * evolution) → gold jobs → query API (SURVEY §3.1-§3.3). */
 class PipelineSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = TestSpark.session
 
   private def newLake(): Lake = {
     val root = Files.createTempDirectory("graft-test-").toString

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.DedupOps
@@ -15,12 +14,7 @@ import graft.sources.Tables
 class PlanAuditSpec extends AnyFunSuite {
   private val dir = "/root/testdata/sf0.001"
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = TestSpark.session
 
   // Audit the plan under the query's declared execution settings — the
   // same path Bench and Verify run — so the asserted shape is the shape

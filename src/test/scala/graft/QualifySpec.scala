@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core._
@@ -11,11 +10,7 @@ import graft.query.QualifyRewriter
 /** QUALIFY-clause rewrite (SURVEY §7.3): the gold dialect's
   * `QUALIFY rn = 1` idiom must run on Spark. */
 class QualifySpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = TestSpark.session
 
   test("string-level rewrite shapes") {
     assert(QualifyRewriter.rewrite("SELECT a FROM t") == "SELECT a FROM t")
@@ -254,8 +249,6 @@ class QualifySpec extends AnyFunSuite {
   }
 
   test("star modifiers execute through the query service rewrite chain") {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]").config("spark.ui.enabled", "false").getOrCreate()
     spark.sql("SELECT 1 AS a, 2 AS b, 3 AS c").createOrReplaceTempView("smt")
     val out = spark.sql(graft.query.StarRewriter.rewrite(
       "SELECT * EXCLUDE (b) REPLACE (a * 10 AS a) FROM smt"))

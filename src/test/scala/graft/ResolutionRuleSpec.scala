@@ -2,30 +2,16 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core._
-import graft.plans.LakeExtensions
 
 /** Catalyst-level `domain.layer.table` resolution (SURVEY §4.3.1): a
-  * session built with LakeExtensions resolves three-part lake names inside
-  * the analyzer — no string rewriting involved. */
+  * session with LakeExtensions (every `core.Sessions` session) resolves
+  * three-part lake names inside the analyzer — no string rewriting
+  * involved. */
 class ResolutionRuleSpec extends AnyFunSuite {
-  private lazy val spark = {
-    // extensions only apply at session CREATION — force a fresh session
-    // (reusing any existing SparkContext) even if another suite already
-    // created one without LakeExtensions
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    SparkSession.builder()
-      .master("local[4]")
-      .appName("resolution-rule")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new LakeExtensions)
-      .getOrCreate()
-  }
+  private lazy val spark = TestSpark.session
 
   test("analyzer resolves silver/gold catalog names and bronze JSON scans") {
     val lake = new Lake(spark, Files.createTempDirectory("graft-rule-").toString)

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.extract.RestExtract
@@ -11,11 +10,7 @@ import graft.sources.{Sinks, Tables}
 /** Export sinks (S12/S13 analog), compaction maintenance, batched delivery
   * (S14), and sample-rows preview (L4). */
 class SinksSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = TestSpark.session
 
   test("export round-trips parquet/json/csv with identical counts") {
     val df = Tables.load(spark, "/root/testdata/sf0.001", "nation")

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,11 +8,7 @@ import graft.ops.Skew
 /** Salted join: identical result to the plain join on heavily skewed
   * keys, with the hot key spread across salt partitions. */
 class SkewSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = TestSpark.session
 
   test("salted join equals plain join on skewed data") {
     import spark.implicits._

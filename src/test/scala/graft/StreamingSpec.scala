@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,12 +10,7 @@ import graft.streaming.BronzeStream
 
 /** Structured-Streaming bronze→silver pipeline tests (SURVEY §2.9). */
 class StreamingSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = TestSpark.session
 
   private val schema = EndpointSchema("clicks", "web", 1, SchemaMode.Manual,
     SchemaDefinition(Seq(

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Encoders, SparkSession}
+import org.apache.spark.sql.Encoders
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,12 +12,7 @@ import graft.functions.TopKByScore
   * with the row_number window plan across partitionings. */
 class TopKByScoreSpec extends AnyFunSuite {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = TestSpark.session
 
   /** Scores with heavy ties (many ids share a score) — the tiebreak
     * (score desc, id asc) must stay total under any merge order. */
